@@ -88,10 +88,12 @@ from m12_kafkastreams_python_azure_spark.operators import vectorops as V
 from m12_kafkastreams_python_azure_spark.operators import similarity as S
 from m12_kafkastreams_python_azure_spark.operators import textops as T
 from m12_kafkastreams_python_azure_spark import ksql as KQ
+from m12_kafkastreams_python_azure_spark.pins import front_door
 from m12_kafkastreams_python_azure_spark.session import tune_for_session
 from m12_kafkastreams_python_azure_spark.sources import layout as L
 
 
+@front_door
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
     tune_for_session(spark)
@@ -99,7 +101,10 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
+    """Every builder, wrapped as a front door: a call releases the pins
+    that the previous call made with no pin scope open (the driver has
+    finished its action on that result by then)."""
+    builders = {
         # ---- driver window, entries 1-50 (see module docstring) ----
         # reference surface (SURVEY.md §2) — always first, every round
         "mask_field": A.q_mask_field,
@@ -315,6 +320,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_lsh": S.q_ann_lsh,
         "ann_ivf": IV.q_ann_ivf,
     }
+    return {name: front_door(build) for name, build in builders.items()}
 
 def oracle_sql() -> dict[str, str]:
     return {

@@ -25,19 +25,18 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 # window ran 66.5 s wall at 24g vs 35.1 s at 8g, and the heavy near-dup
 # block 356 s at 24g vs 263 s at 12g, with strictly better
 # run-convergence at the smaller heap (large Eden = long young-GC pauses
-# that land on random runs and defeat the 4% convergence gate). 12g is
-# the floor of that sweep with safety margin for the sf1 tier; override
-# via SPARK_DRIVER_MEM.
+# that land on random runs and defeat the 4% convergence gate). The
+# default stays inside the measured 8-12g band: a quarter of RAM, at
+# least 8g and at most 12g (12g is the floor of that sweep with safety
+# margin for the sf1 tier); override via SPARK_DRIVER_MEM.
 try:
     _phys_gb = (os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")) >> 30
 except (ValueError, OSError):
     _phys_gb = 32
-os.environ.setdefault("SPARK_DRIVER_MEM", f"{max(4, min(12, _phys_gb // 8))}g")
+os.environ.setdefault("SPARK_DRIVER_MEM", f"{min(12, max(8, _phys_gb // 4))}g")
 
+from m12_kafkastreams_python_azure_spark.pins import query_scope  # noqa: E402
 from m12_kafkastreams_python_azure_spark.session import get_spark  # noqa: E402
-from m12_kafkastreams_python_azure_spark.sources.readers import (  # noqa: E402
-    release_parallel_caches,
-)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -67,14 +66,18 @@ def _budget_spent_frac() -> float:
     return (time.perf_counter() - _SUITE_T0) / BENCH_BUDGET_SEC
 
 #: Measurement-regime tag (VERDICT r18 #2), stamped into every bench
-#: artifact. "fit-outside-clock-v2" = streaming replay processors (and
+#: artifact. "fit-outside-clock" = streaming replay processors (and
 #: their fit-once bloom/model/rate artifacts) are PRE-BUILT before the
 #: timed region starts — the regime r18 restored after ADVICE r17 #1
-#: found r17 had construction inside the clock. Bump this string
-#: whenever the timed-region contract changes; the ratio tables refuse
-#: to compare across regimes (a machine-readable guard replacing the
-#: "compare streaming rows to r16/r18, not r17" ROADMAP note).
-BENCH_REGIME = "fit-outside-clock-v2"
+#: found r17 had construction inside the clock. v3: every headline run
+#: times construction + count() inside its own pin scope, so each run
+#: starts cold (v2 timed construction only for a hand-kept list of eager
+#: queries and released pins once per query, letting runs 2+ read run
+#: 1's caches). Bump this string whenever the timed-region contract
+#: changes; the ratio tables refuse to compare across regimes (a
+#: machine-readable guard replacing the "compare streaming rows to
+#: r16/r18, not r17" ROADMAP note).
+BENCH_REGIME = "fit-outside-clock-v3"
 
 # Headline set: the flagship reference query + the scan/join/agg/window
 # breadth + the training-data-pipeline operators.
@@ -233,48 +236,6 @@ HEADLINE = [
     "ksql_histogram",
 ]
 
-# Driver-looped queries whose work runs at CONSTRUCTION time (the loop
-# collects per-iteration winners, so the returned DataFrame is just the
-# result table): time construction + count, not count alone — timing only
-# count() would measure a createDataFrame of a driver-side list (~0 s).
-# containment_near_dup / excerpt_screen also run eager work at
-# construction (the collapsed-reps persist + materialization barrier) —
-# timing count() alone would exclude the collapse shuffle.
-EAGER_QUERIES = {
-    "bpe_train",
-    "containment_near_dup",
-    "excerpt_screen",
-    # round 20: the near-dup operators gained construction-time
-    # materialization barriers (persist + count) that stop concurrently-
-    # launched consumer stages racing the cache-write and re-running the
-    # signature/collapse pass per subtree (OPTIMIZATION_r20.md). The
-    # barrier moves that work to construction, so construction must be
-    # inside the clock — r19 timed the same total work lazily via
-    # count(), so the rows stay cross-round comparable.
-    "minhash_near_dup",
-    "simhash_near_dup",
-    "embedding_near_dup_lsh",
-    "phash_near_dup",
-    "video_near_dup",
-    "audio_near_dup",
-    # winnow_pairs runs the collapse persist + count barrier at
-    # construction (the containment discipline)
-    "winnow_pairs",
-    # round 21: source_overlap pins its distinct (source, gram) table at
-    # construction (persist + count — the gram explode previously ran
-    # twice, single-task), and cdc_chunk_dedup pins its chunking pass
-    # (one md5 per token n-gram, previously executed twice). Same
-    # accounting rule as the r20 additions: construction inside the
-    # clock covers the same total work r19 timed lazily via count().
-    "source_overlap",
-    "cdc_chunk_dedup",
-    # the composed screen->verify front door and its consumer run the
-    # collapse AND candidate persists (two count barriers) eagerly
-    "containment_screened",
-    "subsumption_prune",
-}
-
-
 def run_headline(spark, queries, names, sf_dir=None):
     """Time each named query (best of three runs), with per-query fault
     isolation: one broken query must never zero out the whole bench
@@ -303,20 +264,20 @@ def run_headline(spark, queries, names, sf_dir=None):
         # fastest runs agree within 4% — a converged min is evidence the
         # noise floor was actually reached, where a fixed N is not. Stable
         # queries still stop at 3; only the noisy ones pay extra runs.
-        # count() materializes the full plan; for top-k/agg queries the
-        # result is tiny, for wide ones we avoid driver transfer cost.
+        # A run is construction + count(), in its own pin scope: some
+        # operators do their work at construction (driver loops, eager
+        # pins), and the scope releases the run's pins so the next run
+        # starts cold. count() materializes the full plan; for top-k/agg
+        # queries the result is tiny, for wide ones we avoid driver
+        # transfer cost.
         runs: list[float] = []
         converged = False
         try:
             while len(runs) < 6:
-                if name in EAGER_QUERIES:
+                with query_scope():
                     t0 = time.perf_counter()
-                    df = queries[name](spark, sf_dir)
-                else:
-                    df = queries[name](spark, sf_dir)
-                    t0 = time.perf_counter()
-                df.count()
-                runs.append(time.perf_counter() - t0)
+                    queries[name](spark, sf_dir).count()
+                    runs.append(time.perf_counter() - t0)
                 best = min(runs)
                 if len(runs) >= 3:
                     s = sorted(runs)
@@ -352,12 +313,9 @@ def run_headline(spark, queries, names, sf_dir=None):
             if best != float("inf"):
                 timings[name] = round(best, 3)
                 runmeta[name] = {"n_runs": len(runs), "converged": False}
-        # operators that persist intermediates would otherwise accumulate
-        # cache across the suite and skew later queries via memory pressure
-        # (clearCache drops DF-level cache; release_parallel_caches frees
-        # the dedup/LSH persist registry, which clearCache does not track)
+        # drop anything cached outside a pin scope, so no query inherits
+        # an earlier query's cache or its memory pressure
         spark.catalog.clearCache()
-        release_parallel_caches()
     return timings, errors, runmeta
 
 
@@ -636,9 +594,10 @@ def main() -> None:
                  "extra runs until the two fastest agree within 4% or 6 "
                  "total — a converged min, not a fixed sample, is what "
                  "collapses the +-7% identical-code band r11/r12 "
-                 "measured; caches cleared between queries (clearCache "
-                 "+ persist-registry release) so no query rides an "
-                 "earlier query's cache",
+                 "measured; every run is construction + count() in its "
+                 "own pin scope (pins released after each run) and "
+                 "clearCache runs between queries, so no run rides an "
+                 "earlier run's cache",
         "streaming": "1 untimed warm-up replay, then CONVERGED-MIN timed "
                      "replays (two fastest within 4%, min 5 / max 10), "
                      "fresh checkpoint each; source split into 32 "
@@ -651,7 +610,7 @@ def main() -> None:
                      "n_runs/converged in throughput_convergence",
         "warmup": "one flagship query + one mapInPandas no-op before "
                   "timing (JIT + Python-worker spin-up)",
-        "materialization": "df.count() per run",
+        "materialization": "construction + df.count() per run",
         "ann_pq_ivfpq": "index training (k-means codebooks / coarse "
                         "centroids) is memoized per corpus fingerprint and "
                         "charged as an offline build — per-query times "
@@ -662,9 +621,9 @@ def main() -> None:
                               "and saves it (offline-build cost, amortized "
                               "by best-of-3); timed runs measure "
                               "load+probe+vote — the real user lifecycle",
-        "bpe_train": "16-merge driver-looped training run; construction "
-                     "is timed (EAGER_QUERIES) because the sequential "
-                     "merge loop runs at construction — wall/16 is the "
+        "bpe_train": "16-merge driver-looped training run; the "
+                     "sequential merge loop runs at construction, inside "
+                     "the construction + count clock — wall/16 is the "
                      "per-merge cost; per-merge work is vocab-sized "
                      "(word-count collapse up front), so it should be "
                      "~flat across SF tiers",
@@ -1311,53 +1270,56 @@ def _curation_stream_throughput(spark) -> dict:
         def _replay(
             metric: str, make_proc, stream_df, replays_per_sample: int = 1
         ) -> None:
-            n = stream_df.count()
-            warm = make_proc(f"{work}/{metric}_warm")
-            half = stream_df.filter(F.col("doc_id") % 2 == 0)
-            for i in range(2):
-                warm(half.filter(F.col("doc_id") % 4 == 2 * i), i)
+            # one pin scope per processor: its fit-once artifacts and
+            # per-shard pins are released before the next processor runs
+            with query_scope():
+                n = stream_df.count()
+                warm = make_proc(f"{work}/{metric}_warm")
+                half = stream_df.filter(F.col("doc_id") % 2 == 0)
+                for i in range(2):
+                    warm(half.filter(F.col("doc_id") % 4 == 2 * i), i)
 
-            counter = iter(range(100))
+                counter = iter(range(100))
 
-            def _full_replay() -> float:
-                # fresh state dir per replay: the fit-once artifacts are
-                # rebuilt at processor construction (BEFORE the clock —
-                # all replays_per_sample processors are pre-built into a
-                # list, ADVICE r17 #1: the r17 batching change had moved
-                # construction inside the timed region, deflating every
-                # *_stream_docs_per_sec), so replays are independent
-                # measurements of steady-state shard cost only. One
-                # timing SAMPLE batches replays_per_sample whole replays
-                # (VERDICT r16 #3): a sub-second single replay sits under
-                # the scheduler-noise floor where the 4% two-fastest gate
-                # can never close — batching the measured unit is the
-                # standard microbenchmark fix, and docs/sec stays honest
-                # because the numerator scales with the same factor.
-                procs = [
-                    make_proc(f"{work}/{metric}{next(counter)}")
-                    for _ in range(replays_per_sample)
-                ]
-                t0 = time.perf_counter()
-                for proc in procs:
-                    for i in range(4):
-                        proc(stream_df.filter(F.col("doc_id") % 4 == i), i)
-                return time.perf_counter() - t0
+                def _full_replay() -> float:
+                    # fresh state dir per replay: the fit-once artifacts are
+                    # rebuilt at processor construction (BEFORE the clock —
+                    # all replays_per_sample processors are pre-built into a
+                    # list, ADVICE r17 #1: the r17 batching change had moved
+                    # construction inside the timed region, deflating every
+                    # *_stream_docs_per_sec), so replays are independent
+                    # measurements of steady-state shard cost only. One
+                    # timing SAMPLE batches replays_per_sample whole replays
+                    # (VERDICT r16 #3): a sub-second single replay sits under
+                    # the scheduler-noise floor where the 4% two-fastest gate
+                    # can never close — batching the measured unit is the
+                    # standard microbenchmark fix, and docs/sec stays honest
+                    # because the numerator scales with the same factor.
+                    procs = [
+                        make_proc(f"{work}/{metric}{next(counter)}")
+                        for _ in range(replays_per_sample)
+                    ]
+                    t0 = time.perf_counter()
+                    for proc in procs:
+                        for i in range(4):
+                            proc(stream_df.filter(F.col("doc_id") % 4 == i), i)
+                    return time.perf_counter() - t0
 
-            # converged-min (VERDICT r14 #2); max raised 3 -> 10 (VERDICT
-            # r15 #4: containment/temperature exited unconverged at 3,
-            # and temperature still at 6 — its replays are SUB-SECOND at
-            # sf0.1, where the 4% two-fastest gate sits below scheduler
-            # noise and convergence is an order-statistics waiting game;
-            # these are the cheap members, so the extra replays are
-            # affordable exactly where needed and only run while the row
-            # is still unconverged)
-            elapsed, meta = converged_best(
-                _full_replay, min_runs=2, max_runs=10, tag=metric
-            )
-            if replays_per_sample > 1:
-                meta = dict(meta, replays_per_sample=replays_per_sample)
-            out[metric] = round(n * replays_per_sample / elapsed, 1)
-            meta_all[metric] = meta
+                # converged-min (VERDICT r14 #2); max raised 3 -> 10 (VERDICT
+                # r15 #4: containment/temperature exited unconverged at 3,
+                # and temperature still at 6 — its replays are SUB-SECOND at
+                # sf0.1, where the 4% two-fastest gate sits below scheduler
+                # noise and convergence is an order-statistics waiting game;
+                # these are the cheap members, so the extra replays are
+                # affordable exactly where needed and only run while the row
+                # is still unconverged)
+                elapsed, meta = converged_best(
+                    _full_replay, min_runs=2, max_runs=10, tag=metric
+                )
+                if replays_per_sample > 1:
+                    meta = dict(meta, replays_per_sample=replays_per_sample)
+                out[metric] = round(n * replays_per_sample / elapsed, 1)
+                meta_all[metric] = meta
 
         ev = docs.filter(F.col("doc_id") % EVAL_MOD == 0)
         train = docs.filter(F.col("doc_id") % EVAL_MOD != 0).select(

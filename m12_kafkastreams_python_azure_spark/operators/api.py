@@ -21,6 +21,7 @@ from m12_kafkastreams_python_azure_spark.functions.vectors import (
 from m12_kafkastreams_python_azure_spark.operators import dedup as _dedup
 from m12_kafkastreams_python_azure_spark.operators import ivf as _ivf
 from m12_kafkastreams_python_azure_spark.operators import similarity as _sim
+from m12_kafkastreams_python_azure_spark.pins import pin
 
 
 # ------------------------------------------------------------- text near-dup
@@ -91,7 +92,6 @@ def embedding_near_dup_lsh(
     bands: int = 8,
     max_bucket: int = 2000,
     collapse_exact: bool = True,
-    _fresh: bool = True,
 ) -> DataFrame:
     """Banded sign-LSH near-dup pairs with exact-cosine verification.
 
@@ -122,24 +122,22 @@ def embedding_near_dup_lsh(
     VERDICT r18 #3, same discipline as the containment verify).
     """
     if collapse_exact:
-        # release FIRST, then pin the collapse NARROW (the minhash rule,
-        # r21): the window — a full shuffle+sort of the vector table —
-        # previously re-executed in every downstream subtree (the rep
-        # pipeline, the validity filter, the self-sim projection and each
-        # of the three expansion branches; the r20 stage profile showed a
-        # 75 s-executor-time stage that was exactly this). The r20 cut
-        # pinned the FULL window output (vectors included) and measured
-        # 2x slower at same cores; pin="narrow" caches only the 16-byte
-        # (_m_id, _rep_id) mapping — one window execution — and rebuilds
-        # reps as a scan + broadcast semi-join. The inner pipeline gets
-        # _fresh=False so its own release does not unpersist the pin.
-        _dedup.release_parallel_caches()
+        # pin the collapse NARROW (the minhash rule, r21): the window — a
+        # full shuffle+sort of the vector table — previously re-executed
+        # in every downstream subtree (the rep pipeline, the validity
+        # filter, the self-sim projection and each of the three expansion
+        # branches; the r20 stage profile showed a 75 s-executor-time
+        # stage that was exactly this). The r20 cut pinned the FULL window
+        # output (vectors included) and measured 2x slower at same cores;
+        # pin="narrow" caches only the 16-byte (_m_id, _rep_id) mapping —
+        # one window execution — and rebuilds reps as a scan + broadcast
+        # semi-join.
         mapping, reps = _dedup.collapse_exact_groups(
             df, [vec_col], id_col, pin="narrow"
         )
         rep_pairs = embedding_near_dup_lsh(
             reps, threshold, id_col, vec_col, dim, planes_per_band, bands,
-            max_bucket, collapse_exact=False, _fresh=False,
+            max_bucket, collapse_exact=False,
         )
         # parity with the uncollapsed path, which never emits NULL- or
         # zero-norm-vector pairs (NULL sign-bits generate no band rows; a
@@ -172,25 +170,16 @@ def embedding_near_dup_lsh(
         return _dedup.expand_collapsed_pairs(
             rep_pairs, mapping, "sim", self_sim, max_bucket
         )
-    # free the previous invocation's cached intermediates (same bounded-
-    # cache discipline as the text-dedup helpers); _fresh=False when the
-    # collapse path above already released and holds the pinned window
-    if _fresh:
-        _dedup.release_parallel_caches()
-    base = (
+    # Eager pin: the band stage and both verify sides read this cache in
+    # concurrently-launched stages; racing first-computation serializes on
+    # the cache-write lock (see dedup._parallel_text).
+    base = pin(
         df.select(
             F.col(id_col).alias("id"),
             F.col(vec_col).alias("v"),
             l2_norm(F.col(vec_col)).alias("nrm"),
-        )
-        .repartition(df.sparkSession.sparkContext.defaultParallelism)
-        .persist()
+        ).repartition(df.sparkSession.sparkContext.defaultParallelism)
     )
-    _dedup.register_parallel_cache(base)
-    # Eager materialization: the band stage and both verify sides read this
-    # cache in concurrently-launched stages; racing first-computation
-    # serializes on the cache-write lock (see dedup._parallel_text).
-    base.count()
 
     # All bands' sign bits in ONE pass over one literal plane matrix, then
     # per-band bucket ids sliced out of the bits array — keeps the Catalyst
@@ -238,8 +227,7 @@ def embedding_near_dup_lsh(
     # unconditional hint would push an unbounded table at the driver.
     # The persist barrier pays for the count once and the verify joins
     # read the cached pairs instead of re-running the band shuffle.
-    cands = cands.persist()
-    _dedup.register_parallel_cache(cands)
+    cands = pin(cands, eager=False)
     n_cand = cands.count()
     cand_side = (
         F.broadcast(cands)

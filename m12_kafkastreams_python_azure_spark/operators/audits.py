@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from m12_kafkastreams_python_azure_spark.pins import pin
 from m12_kafkastreams_python_azure_spark.sources.readers import load_table
 
 OVERLAP_NGRAM = 8
@@ -49,9 +50,6 @@ def source_overlap(
     one source. Per-source totals are a |sources|-row aggregate,
     broadcast back. Output is at most |sources| choose 2 rows."""
     from m12_kafkastreams_python_azure_spark.operators.corpus import word_ngrams
-    from m12_kafkastreams_python_azure_spark.sources.readers import (
-        register_parallel_cache,
-    )
 
     # Pinned (r21, guide §5): the distinct (source, gram) table feeds
     # THREE subtrees (per-source totals + both self-join sides) and the
@@ -60,14 +58,11 @@ def source_overlap(
     # the single-file scan gotcha keeps a bare explode on one core; the
     # q_ entry now parallel_scans first). One explode materializes the
     # cache; totals and both join sides are cache reads.
-    gs = register_parallel_cache(
+    gs = pin(
         docs.select(
             "source", F.explode(word_ngrams(F.col("text"), n)).alias("gram")
-        )
-        .distinct()
-        .persist()
+        ).distinct()
     )
-    gs.count()
     totals = gs.groupBy("source").agg(F.count(F.lit(1)).alias("n_grams"))
     a = gs.select(F.col("source").alias("source_a"), "gram")
     b = gs.select(F.col("source").alias("source_b"), "gram")

@@ -37,6 +37,7 @@ from typing import NamedTuple
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..pins import pin
 from ..sources.readers import load_table, parallel_scan
 
 NGRAM_N = 5
@@ -985,17 +986,12 @@ def build_decontam_bloom(docs: DataFrame, n: int = DECONTAM_N) -> DecontamBloom:
     distinct grams, and build the bloom over them — the offline index
     step. The eval-gram cache feeds both the bloom construction and
     every subsequent confirm join."""
-    from m12_kafkastreams_python_azure_spark.sources.readers import (
-        register_parallel_cache,
-    )
-
-    eval_grams = (
+    eval_grams = pin(
         docs.filter(F.col("doc_id") % EVAL_MOD == 0)
         .select(F.explode(word_ngrams(F.col("text"), n)).alias("gram"))
-        .distinct()
-        .persist()
+        .distinct(),
+        eager=False,
     )
-    register_parallel_cache(eval_grams)
     words, m_bits = build_gram_bloom(eval_grams)
     return DecontamBloom(words, m_bits, eval_grams, n)
 
@@ -1143,16 +1139,11 @@ def ccnet_buckets(docs: DataFrame, thresholds: str = "exact") -> DataFrame:
         )
     )
     if thresholds == "approx":
-        from m12_kafkastreams_python_azure_spark.sources.readers import (
-            register_parallel_cache,
-        )
-
-        # persisted: the cutoff aggregate AND the bucketing join both
+        # pinned: the cutoff aggregate AND the bucketing join both
         # consume the scored table (no cross-subtree CSE — the LM scoring
         # explode+joins would run twice); output is 3 narrow cols/doc, so
         # the persist-selectivity rule says cache
-        j = scored.join(langs, "doc_id").persist()
-        register_parallel_cache(j)
+        j = pin(scored.join(langs, "doc_id"), eager=False)
         cuts = j.groupBy("lang").agg(
             F.percentile_approx(
                 "avg_log2p",

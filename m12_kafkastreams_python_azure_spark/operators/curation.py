@@ -50,6 +50,7 @@ from m12_kafkastreams_python_azure_spark.operators.similarity import _probe_dim
 from m12_kafkastreams_python_azure_spark.operators.corpus import (
     word_ngrams as corpus_ngrams,
 )
+from m12_kafkastreams_python_azure_spark.pins import pin
 from m12_kafkastreams_python_azure_spark.sources.readers import (
     load_table,
     parallel_scan,
@@ -742,21 +743,20 @@ def quality_percentile_filter(
     from m12_kafkastreams_python_azure_spark.functions.text import (
         quality_score_cols,
     )
-    from m12_kafkastreams_python_azure_spark.sources.readers import (
-        register_parallel_cache,
-    )
 
-    # persisted: the cutoff aggregate AND the join both consume the scored
+    # pinned: the cutoff aggregate AND the join both consume the scored
     # table, and Spark has no cross-subtree CSE — unpersisted, the (text-
     # expression-heavy) scoring pass runs TWICE over the corpus (measured
     # 4.34 s -> 2.46 s at sf1; the round-8 token_budget_select lesson,
     # found here by the sf-factor audit: 7.3x at 10x data, ~half of it
     # the duplicated scoring pass)
-    scored = docs.select(
-        "doc_id", "lang",
-        quality_score_cols(F.col("text"))["quality_score"].alias("q"),
-    ).persist()
-    register_parallel_cache(scored)
+    scored = pin(
+        docs.select(
+            "doc_id", "lang",
+            quality_score_cols(F.col("text"))["quality_score"].alias("q"),
+        ),
+        eager=False,
+    )
     cut_agg = (
         F.percentile_approx("q", F.lit(pct), F.lit(APPROX_PCT_ACCURACY))
         if approx
@@ -876,20 +876,17 @@ def _budget_fill(scored: DataFrame, budget: int, buckets: int) -> DataFrame:
     with their (doc_id, n_tokens, q) columns; callers alias q to their
     score's name. Identical to the naive global-cumsum spelling because
     floor(q * buckets) is monotone in q."""
-    from m12_kafkastreams_python_azure_spark.sources.readers import (
-        register_parallel_cache,
-    )
-
-    # Persisted (registry): BOTH the bucket-total aggregate and the
-    # per-doc keep pass consume the scored projection; without the pin
+    # Pinned: BOTH the bucket-total aggregate and the per-doc keep pass
+    # consume the scored projection; without the pin
     # each subtree re-runs the (possibly expensive) scoring. 4 narrow
     # columns — the standard materialized projection for multi-pass
     # consumption, same trade as dedup._parallel_text.
-    scored = register_parallel_cache(
+    scored = pin(
         scored.withColumn(
             "bucket",
             F.least(F.lit(buckets - 1), F.floor(F.col("q") * buckets)).cast("int"),
-        ).persist()
+        ),
+        eager=False,
     )
     bw = (
         Window.orderBy(F.desc("bucket"))
@@ -1842,17 +1839,12 @@ def cdc_chunk_dedup(
     The cross-doc frequency is a chunk-keyed groupBy + countDistinct
     (map-side combined; never a collect_set window over the hottest
     chunk — the segment_dedup discipline), joined back on the chunk."""
-    from m12_kafkastreams_python_azure_spark.sources.readers import (
-        register_parallel_cache,
-    )
-
     # Pinned (r21, guide §5): the chunking pass hashes one md5 PER TOKEN
     # n-gram, and its two consumers (the chunk-frequency aggregate and
     # the join-back side) re-ran it end to end — the r21 stage profile
     # showed the same Union+Project chunking stage twice, 43 + 21
     # executor-seconds at sf0.1. One execution materializes the cache.
-    ch = register_parallel_cache(cdc_chunks(docs, window, divisor).persist())
-    ch.count()
+    ch = pin(cdc_chunks(docs, window, divisor))
     freq = (
         ch.groupBy("chunk")
         .agg(F.count_distinct("doc_id").alias("_nd"))

@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from m12_kafkastreams_python_azure_spark.functions.text import doc_fingerprint
+from m12_kafkastreams_python_azure_spark import pins
 from m12_kafkastreams_python_azure_spark.sources.readers import load_table
 
 # ------------------------------------------------------------------ exact
@@ -218,15 +219,6 @@ def star_pairs(ids: Column) -> Column:
     )
 
 
-# The shared persisted-intermediate registry lives in sources.readers
-# (next to parallel_scan, which also registers); re-exported here because
-# sibling operators (similarity/graph/api) import it from this module.
-from m12_kafkastreams_python_azure_spark.sources.readers import (  # noqa: E402
-    register_parallel_cache,
-    release_parallel_caches,
-)
-
-
 def expansion_partitions(df: DataFrame) -> int:
     """Partition count for the bucket-expansion exchange. Scales with the
     cluster (defaultParallelism // 4 — the expansion is compute-light per
@@ -320,41 +312,21 @@ def collapse_exact_groups(
       payload-width window output is never cached. Requires ``id_col``
       values to be unique (every caller's ids are primary keys).
 
-    Callers that pin MUST own the cache registry for the rest of the
-    query: any nested pipeline that calls ``release_parallel_caches()``
-    after this point (``_parallel_text`` with ``fresh=True``) would
-    unpersist the pin mid-query — the LSH front doors release FIRST and
-    pass ``_fresh=False`` inward.
-
-    BENCH COUPLING (ADVICE r20 #3): the pin's count() is an eager Spark
-    job at CONSTRUCTION time, so any bench.py HEADLINE entry that
-    transitively constructs a pinning operator must be listed in
-    ``bench.EAGER_QUERIES`` (timed from construction) or the collapse
-    work silently runs outside the clock. Every current front door
-    (minhash/simhash/embedding LSH, banded-Hamming multimodal callers,
-    containment/winnow/screened family) is listed.
-
-    NOTE: without ``pin``, ``mapping`` is returned LAZY — callers that
-    run a cache-releasing pipeline between collapse and expansion must
-    persist it AFTER that pipeline materializes, or accept the
-    recompute."""
+    NOTE: without ``pin``, ``mapping`` is returned LAZY."""
     digest = F.xxhash64(*[F.col(c) for c in key_cols])
     w = Window.partitionBy(digest, *key_cols)
     tagged = df.withColumn("_rep_id", F.min(F.col(id_col)).over(w))
     if pin == "narrow":
-        mapping = tagged.select(F.col(id_col).alias("_m_id"), "_rep_id")
-        mapping = mapping.persist()
-        register_parallel_cache(mapping)
-        mapping.count()
+        mapping = pins.pin(
+            tagged.select(F.col(id_col).alias("_m_id"), "_rep_id")
+        )
         rep_ids = mapping.filter(
             F.col("_m_id") == F.col("_rep_id")
         ).select(F.col("_m_id").alias(id_col))
         reps = df.join(rep_ids, id_col, "left_semi")
         return mapping, reps
     if pin:  # True / "full"
-        tagged = tagged.persist()
-        register_parallel_cache(tagged)
-        tagged.count()
+        tagged = pins.pin(tagged)
     mapping = tagged.select(F.col(id_col).alias("_m_id"), "_rep_id")
     reps = tagged.filter(F.col(id_col) == F.col("_rep_id")).drop("_rep_id")
     return mapping, reps
@@ -416,9 +388,7 @@ def expand_collapsed_pairs(
     return cross.unionByName(within)
 
 
-def _parallel_text(
-    df: DataFrame, text_col: str, id_col: str, fresh: bool = True
-) -> DataFrame:
+def _parallel_text(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """(id, t) spread over all cores WITH a materialization barrier.
 
     A bare ``repartition(n)`` is NOT enough when the input is one small
@@ -429,45 +399,30 @@ def _parallel_text(
     At real scale the scan has thousands of splits and this is a no-op
     round-robin plus a cheap cache of (id, text).
     """
-    # Bound cache growth: each new dedup invocation frees the previous
-    # one's intermediates (callers needing tighter control can call
-    # release_parallel_caches() right after their terminal action).
-    # ``fresh=False`` skips the release: the caller already released and
-    # holds a PINNED cache this query still needs (collapse_exact_groups
-    # pin=True) — releasing here would unpersist it mid-query.
-    if fresh:
-        release_parallel_caches()
     parallelism = df.sparkSession.sparkContext.defaultParallelism
-    out = (
+    # Materialized NOW (eager pin), before fan-out: several downstream
+    # stages read this cache concurrently (AQE launches them together),
+    # and racing tasks serialize on the per-partition cache-write lock — a
+    # convoy that showed up as nondeterministic 3-10x stalls in the bench
+    # suite. One cheap action turns all downstream accesses into
+    # lock-free reads.
+    return pins.pin(
         df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t"))
         .repartition(parallelism)
-        .persist()
     )
-    register_parallel_cache(out)
-    # Materialize NOW, before fan-out: several downstream stages read this
-    # cache concurrently (AQE launches them together), and racing tasks
-    # serialize on the per-partition cache-write lock — a convoy that
-    # showed up as nondeterministic 3-10x stalls in the bench suite. One
-    # cheap action turns all downstream accesses into lock-free reads.
-    out.count()
-    return out
 
 
 def _parallel_shingles(
-    df: DataFrame, text_col: str, id_col: str, shingle_n: int,
-    fresh: bool = True,
+    df: DataFrame, text_col: str, id_col: str, shingle_n: int
 ) -> DataFrame:
     """Shingle sets computed in parallel (see ``_parallel_text``), cached
-    for reuse by the signature pass and both verify-join sides."""
-    out = (
-        _parallel_text(df, text_col, id_col, fresh=fresh)
+    for reuse by the signature pass and both verify-join sides; eager for
+    the same convoy-avoidance as ``_parallel_text``."""
+    return pins.pin(
+        _parallel_text(df, text_col, id_col)
         .select("id", shingles(F.col("t"), shingle_n).alias("sh"))
         .filter(F.size("sh") > 0)
-        .persist()
     )
-    register_parallel_cache(out)
-    out.count()  # same convoy-avoidance as _parallel_text
-    return out
 
 
 def minhash_near_dup_pairs(
@@ -480,7 +435,6 @@ def minhash_near_dup_pairs(
     jaccard_threshold: float = 0.6,
     max_bucket: int = 1000,
     collapse_exact: bool = True,
-    _fresh: bool = True,
 ) -> DataFrame:
     """MinHash+LSH near-duplicate pairs with exact-Jaccard verification.
 
@@ -512,29 +466,26 @@ def minhash_near_dup_pairs(
         # the uncollapsed path's size(sh) > 0 filter never drops a doc —
         # identical NULL/short texts legitimately pair at Jaccard 1.0 in
         # BOTH paths (pinned in test_dedup_scale)
-        # release FIRST, then pin the collapse NARROW (r21): the window —
-        # a full shuffle+sort of the raw text — previously re-executed in
-        # every downstream subtree (the rep pipeline and each of the three
-        # expansion branches, racing when launched together). The r20 cut
-        # pinned the FULL window output (raw text included) and measured
-        # 2.8x SLOWER at same cores than no pin; pin="narrow" caches only
-        # the 16-byte (_m_id, _rep_id) mapping — one window execution —
-        # and rebuilds reps as a scan + broadcast semi-join. The inner
-        # pipeline gets _fresh=False so its _parallel_text does not
-        # unpersist the pin.
-        release_parallel_caches()
+        # pin the collapse NARROW (r21): the window — a full shuffle+sort
+        # of the raw text — previously re-executed in every downstream
+        # subtree (the rep pipeline and each of the three expansion
+        # branches, racing when launched together). The r20 cut pinned
+        # the FULL window output (raw text included) and measured 2.8x
+        # SLOWER at same cores than no pin; pin="narrow" caches only the
+        # 16-byte (_m_id, _rep_id) mapping — one window execution — and
+        # rebuilds reps as a scan + broadcast semi-join.
         mapping, reps = collapse_exact_groups(
             df, [text_col], id_col, pin="narrow"
         )
         rep_pairs = minhash_near_dup_pairs(
             reps, text_col, id_col, shingle_n, num_hashes, bands,
-            jaccard_threshold, max_bucket, collapse_exact=False, _fresh=False,
+            jaccard_threshold, max_bucket, collapse_exact=False,
         )
         return expand_collapsed_pairs(
             rep_pairs, mapping, "jaccard", F.lit(1.0), max_bucket
         )
     rows_per_band = num_hashes // bands
-    base = _parallel_shingles(df, text_col, id_col, shingle_n, fresh=_fresh)
+    base = _parallel_shingles(df, text_col, id_col, shingle_n)
     # Hash every shingle string exactly once; signatures derive from the
     # long array (a named column, so it is single-evaluation).
     sig = (
@@ -734,19 +685,13 @@ def containment_pairs(
     a Spark job (persist + count materialization barrier) when this
     function is CALLED, not when the returned DataFrame is acted on —
     callers that only build/explain the plan still pay the collapse
-    shuffle, and bench.py therefore times this operator in
-    EAGER_QUERIES (construction + count)."""
-    from ..sources.readers import register_parallel_cache
-
+    shuffle."""
     # Persist the collapsed reps: the gram table has TWO consumers (the
     # hot-gram aggregate and the rare anti-join) and Spark shares no
     # subtrees across join branches, so without the pin the collapse
     # shuffle would run twice (measured: +2 s at sf0.1). The count() is
     # the materialization barrier (the parallel_scan discipline).
-    reps = register_parallel_cache(
-        collapse_reps_only(docs.select("doc_id", "text")).persist()
-    )
-    reps.count()
+    reps = pins.pin(collapse_reps_only(docs.select("doc_id", "text")))
     return _exact_pairs_on_reps(
         reps, n, threshold, max_df, expansion_partitions(docs)
     )
@@ -764,8 +709,6 @@ def _exact_pairs_on_reps(
     (ADVICE r16) so ``subsumption_prune`` shares ONE collapse between
     pair detection and its keep-list base instead of collapsing twice —
     the same reuse discipline ``_screened_pairs_on_reps`` already has."""
-    from ..sources.readers import register_parallel_cache
-
     g = reps.select(
         "doc_id", F.explode(shingles(F.col("text"), n)).alias("gram")
     )
@@ -786,8 +729,7 @@ def _exact_pairs_on_reps(
     # into the cache; every consumer is a cache read. MEMORY_AND_DISK
     # default: at 100 TB this spills rather than re-exploding the corpus
     # per subtree — disk-read of (id, gram) rows beats re-tokenizing.
-    rare = register_parallel_cache(g.join(hot, "gram", "left_anti").persist())
-    rare.count()
+    rare = pins.pin(g.join(hot, "gram", "left_anti"))
     sizes = rare.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams"))
     # Candidate pairs via bucket-LOCAL expansion (the minhash cands
     # pattern), not a gram-keyed self-join: each gram's rows shuffle ONCE
@@ -912,17 +854,15 @@ def _rare_grams(reps: DataFrame, n: int, max_df: int) -> DataFrame:
     without the pin the full-gram aggregate re-runs per branch. The
     explode itself stays unpersisted: it is a narrow pass over the
     caller's already-persisted reps (the containment_pairs trade)."""
-    from ..sources.readers import register_parallel_cache
-
     g = reps.select(
         "doc_id", F.explode(shingles(F.col("text"), n)).alias("gram")
     )
-    hot = register_parallel_cache(
+    hot = pins.pin(
         g.groupBy("gram")
         .agg(F.count(F.lit(1)).alias("df"))
         .filter(F.col("df") > max_df)
-        .select("gram")
-        .persist()
+        .select("gram"),
+        eager=False,
     )
     return g.join(hot, "gram", "left_anti"), hot
 
@@ -954,19 +894,15 @@ def _containment_verify_on_reps(
     table. Per-doc sizes only need candidate docs' rows: a doc's
     non-ubiquitous gram count doesn't depend on other docs once the hot
     table is fixed."""
-    from ..sources.readers import register_parallel_cache
-
     cand_docs = (
         cand.select(F.col("id_a").alias("doc_id"))
         .unionByName(cand.select(F.col("id_b").alias("doc_id")))
         .distinct()
     )
-    # Persisted (registry): three consumers (per-doc sizes, the a-side
-    # and the b-side of the shared-gram join) would otherwise re-run the
-    # gram explode + hot anti-join + candidate semi-join thrice.
-    rare_c = register_parallel_cache(
-        rare.join(cand_docs, "doc_id", "left_semi").persist()
-    )
+    # Pinned: three consumers (per-doc sizes, the a-side and the b-side
+    # of the shared-gram join) would otherwise re-run the gram explode +
+    # hot anti-join + candidate semi-join thrice.
+    rare_c = pins.pin(rare.join(cand_docs, "doc_id", "left_semi"), eager=False)
     sizes = rare_c.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams"))
     ga = rare_c.select(F.col("doc_id").alias("id_a"), "gram")
     gb = rare_c.select(F.col("doc_id").alias("id_b"), "gram")
@@ -1049,7 +985,6 @@ def _screened_pairs_on_reps(
         WINNOW_W,
         winnow_pair_scores,
     )
-    from ..sources.readers import register_parallel_cache
 
     cand_long = winnow_pair_scores(
         reps, n_parts=n_parts, threshold=screen_threshold
@@ -1077,9 +1012,7 @@ def _screened_pairs_on_reps(
         )
         .distinct()
     )
-    cand = register_parallel_cache(
-        cand_long.unionByName(cand_short).distinct().persist()
-    )
+    cand = pins.pin(cand_long.unionByName(cand_short).distinct(), eager=False)
     n_cand = cand.count()
     return _containment_verify_on_reps(reps, rare, cand, threshold, n_cand)
 
@@ -1133,17 +1066,11 @@ def containment_screened(
     the recall at 1x/10x/100x.
 
     Inherits the duplicate law and eager construction: exact duplicates
-    collapse ONCE (shared by both tiers), persisted with a count barrier
-    — bench times this in EAGER_QUERIES.
+    collapse ONCE (shared by both tiers), persisted with a count barrier.
 
     Reference parity note: the reference app has no near-dup surface at
     all (SURVEY.md §2) — this extends the training-data-pipeline tier."""
-    from ..sources.readers import register_parallel_cache
-
-    reps = register_parallel_cache(
-        collapse_reps_only(docs.select("doc_id", "text")).persist()
-    )
-    reps.count()
+    reps = pins.pin(collapse_reps_only(docs.select("doc_id", "text")))
     return _screened_pairs_on_reps(
         reps, n, threshold, max_df, screen_threshold, expansion_partitions(docs)
     )
@@ -1189,16 +1116,11 @@ def subsumption_prune(
     duplicates collapse to their representative first; pairs AMONG exact
     duplicates are exact-dedup's domain (``dedup_exact``). Output: the
     kept doc_ids (one column, ascending ids hash-stable)."""
-    from ..sources.readers import register_parallel_cache
-
     # ONE collapse, shared between the pair detector and the keep-list
     # base (ADVICE r16: the detectors' internal collapse was recomputed
     # here — an extra full collapse shuffle per call). The persisted reps
     # feed _exact_pairs_on_reps / _screened_pairs_on_reps directly.
-    reps = register_parallel_cache(
-        collapse_reps_only(docs.select("doc_id", "text")).persist()
-    )
-    reps.count()
+    reps = pins.pin(collapse_reps_only(docs.select("doc_id", "text")))
     n_parts = expansion_partitions(docs)
     pairs = (
         _exact_pairs_on_reps(reps, n, threshold, max_df, n_parts)
@@ -1392,19 +1314,17 @@ def build_containment_ref(
     contract), so duplicates in a batch just produce duplicate verdicts
     for distinct ids — correct, and never a df-cap hazard because the
     guard is reference-side."""
-    from ..sources.readers import register_parallel_cache
-
     reps = collapse_reps_only(ref_docs.select("doc_id", "text"))
     g = reps.select(
         F.col("doc_id").alias("ref_id"),
         F.explode(shingles(F.col("text"), n)).alias("gram"),
     )
-    hot = register_parallel_cache(
+    hot = pins.pin(
         g.groupBy("gram")
         .agg(F.count(F.lit(1)).alias("df"))
         .filter(F.col("df") > max_df)
-        .select("gram")
-        .persist()
+        .select("gram"),
+        eager=False,
     )
     # Pin the reference artifacts (r21, guide §5): "build-once" was only
     # true per CONSUMER SUBTREE before — the batch excerpt_screen spelling
@@ -1415,8 +1335,7 @@ def build_containment_ref(
     # sizes stays a lazy aggregate over the cached rows. hot is pinned
     # separately (it is consumed by the NEW side's anti-join on its own);
     # rare.count() doubles as its materialization barrier.
-    rare = register_parallel_cache(g.join(hot, "gram", "left_anti").persist())
-    rare.count()
+    rare = pins.pin(g.join(hot, "gram", "left_anti"))
     sizes = rare.groupBy("ref_id").agg(F.count(F.lit(1)).alias("n_ref_grams"))
     return rare, sizes, hot
 
@@ -1447,21 +1366,15 @@ def containment_against(
     is a micro-batch, never the corpus); one map-side-combined pair
     count; two broadcast size join-backs. Output: (doc_id, ref_id,
     shared_grams, containment_new, containment_ref, containment)."""
-    from ..sources.readers import register_parallel_cache
-
     # Pin the new side's df-filtered grams (r21): TWO consumers (per-doc
     # sizes and the shared-gram join) re-ran the batch explode + hot
-    # anti-join otherwise. Registry-managed: the FIFO cap bounds growth
-    # across streaming micro-batches, and the bench releases between
-    # queries.
-    g_new = register_parallel_cache(
+    # anti-join otherwise. The streaming processor scopes each
+    # micro-batch, so pins never accumulate across batches.
+    g_new = pins.pin(
         new_docs.select(
             "doc_id", F.explode(shingles(F.col("text"), n)).alias("gram")
-        )
-        .join(hot, "gram", "left_anti")
-        .persist()
+        ).join(hot, "gram", "left_anti")
     )
-    g_new.count()
     new_sizes = g_new.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_new_grams")
     )
@@ -1909,7 +1822,6 @@ def simhash_near_dup_pairs(
     bands: int = 4,
     max_bucket: int = 1000,
     collapse_exact: bool = True,
-    _fresh: bool = True,
 ) -> DataFrame:
     """SimHash near-dup pairs: band the 64-bit simhash into ``bands``
     16-bit slices; by pigeonhole, any pair within Hamming distance <
@@ -1920,17 +1832,16 @@ def simhash_near_dup_pairs(
     representative before banding and expand back afterwards at Hamming
     exactly 0 — see ``minhash_near_dup_pairs`` for the rationale."""
     if collapse_exact:
-        # release + pin the collapse NARROW (the minhash rule, r21): one
-        # window execution materializes the 16-byte mapping cache; reps
-        # rebuild as a scan + broadcast semi-join (the r20 full-width pin
-        # measured 4x slower at same cores — raw text cached per query)
-        release_parallel_caches()
+        # pin the collapse NARROW (the minhash rule, r21): one window
+        # execution materializes the 16-byte mapping cache; reps rebuild
+        # as a scan + broadcast semi-join (the r20 full-width pin measured
+        # 4x slower at same cores — raw text cached per query)
         mapping, reps = collapse_exact_groups(
             df, [text_col], id_col, pin="narrow"
         )
         rep_pairs = simhash_near_dup_pairs(
             reps, text_col, id_col, max_hamming, bands, max_bucket,
-            collapse_exact=False, _fresh=False,
+            collapse_exact=False,
         )
         # parity with the uncollapsed path, where a NULL simhash yields a
         # NULL hamming the verify filter drops: exclude those GROUPS from
@@ -1951,7 +1862,7 @@ def simhash_near_dup_pairs(
         return expand_collapsed_pairs(
             rep_pairs, mapping, "hamming", F.lit(0), max_bucket
         )
-    sigs = _parallel_text(df, text_col, id_col, fresh=_fresh).select(
+    sigs = _parallel_text(df, text_col, id_col).select(
         "id", simhash64(F.col("t")).alias("sim")
     )
     # collapse_identical=False: the text collapse above already removed
@@ -1993,15 +1904,12 @@ def banded_hamming_pairs(
     that already collapsed upstream (simhash's text collapse) pass
     False."""
     if collapse_identical:
-        # release FIRST (ADVICE r20 #2 — match the documented front-door
-        # discipline; the only external collapse_identical caller, phash,
-        # registers nothing beforehand), then PIN the collapse window
-        # output (r20): the expression tree under it is the caller's
-        # signature pass — for multimodal callers a mapInPandas
-        # decode+hash of every payload — plus the full shuffle+sort of
-        # the 16-byte signature rows. The validity filter, the banded rep
-        # path and the three expansion branches are separate join
-        # subtrees with no cross-subtree CSE, so unpinned the Python
+        # PIN the collapse window output (r20): the expression tree under
+        # it is the caller's signature pass — for multimodal callers a
+        # mapInPandas decode+hash of every payload — plus the full
+        # shuffle+sort of the 16-byte signature rows. The validity filter,
+        # the banded rep path and the three expansion branches are separate
+        # join subtrees with no cross-subtree CSE, so unpinned the Python
         # signature pass re-executed once per subtree (r20 stage profile:
         # phash_near_dup ran the dHash UDF 3x, ~40 s executor time each
         # at sf0.1). One pin makes the UDF AND the window once-per-query;
@@ -2010,7 +1918,6 @@ def banded_hamming_pairs(
         # table — 24-byte cached rows — and a narrow pin would re-run the
         # Python signature pass to rebuild reps, the very cost the pin
         # deletes (phash measured 3.8 s -> 2.8 s with the full pin, r21).
-        release_parallel_caches()
         mapping, reps = collapse_exact_groups(sigs, ["sim"], "id", pin=True)
         rep_pairs = banded_hamming_pairs(
             reps, max_hamming, bands, max_bucket, collapse_identical=False

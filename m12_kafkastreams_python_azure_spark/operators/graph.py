@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..pins import pin
 from ..sources.readers import load_table
 from .dedup import jaccard, shingles
 
@@ -182,23 +183,17 @@ def pagerank(
     with no in-edges keeps the teleport floor (1-d)/N each round; given the
     out-edge precondition, total mass stays exactly 1.
     """
-    from .dedup import register_parallel_cache, release_parallel_caches
-
     # The edge list (and its degree table) is read by EVERY iteration's
     # join — without a cache the upstream scan/distinct/union would
     # re-execute once per occurrence in the final plan (~2x per round).
-    # Registered in the shared cache registry so the next operator
-    # invocation (or release_parallel_caches) frees the blocks; released
-    # on entry so repeated pagerank calls don't accumulate cached blocks.
-    release_parallel_caches()
-    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")).persist()
-    register_parallel_cache(e)
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).persist()
-    register_parallel_cache(deg)
-    # nodes joins into every round (teleport-floor retention) — persist so
+    e = pin(
+        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")),
+        eager=False,
+    )
+    deg = pin(e.groupBy("src").agg(F.count(F.lit(1)).alias("deg")), eager=False)
+    # nodes joins into every round (teleport-floor retention) — pinned so
     # the distinct doesn't recompute per plan occurrence
-    nodes = e.select(F.col("src").alias("node")).distinct().persist()
-    register_parallel_cache(nodes)
+    nodes = pin(e.select(F.col("src").alias("node")).distinct(), eager=False)
     n = nodes.count()  # one small driver scalar; the iteration stays lazy
     if n == 0:
         raise ValueError(
@@ -319,20 +314,18 @@ def dedup_keep_best(
             docs, text_col, id_col, jaccard_threshold=jaccard_threshold
         ).select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     elif method == "prefix":
-        from m12_kafkastreams_python_azure_spark.sources.readers import (
-            register_parallel_cache,
-        )
-
-        # persisted: both self-join sides consume the shingle table and
+        # pinned: both self-join sides consume the shingle table and
         # Spark has no cross-subtree CSE — unpersisted, the zip-with
         # shingle construction runs twice over the corpus (same-process
         # A/B: sf0.1 4.48 -> 2.69 s, sf1 12.2 -> 8.6 s)
-        sh = docs.select(
-            F.col(id_col).alias("id"),
-            F.substring(F.col(text_col), 1, prefix_len).alias("pfx"),
-            shingles(F.col(text_col)).alias("sh"),
-        ).persist()
-        register_parallel_cache(sh)
+        sh = pin(
+            docs.select(
+                F.col(id_col).alias("id"),
+                F.substring(F.col(text_col), 1, prefix_len).alias("pfx"),
+                shingles(F.col(text_col)).alias("sh"),
+            ),
+            eager=False,
+        )
         a = sh.select(F.col("id").alias("id_a"), "pfx", F.col("sh").alias("sh_a"))
         b = sh.select(F.col("id").alias("id_b"), "pfx", F.col("sh").alias("sh_b"))
         pairs = (

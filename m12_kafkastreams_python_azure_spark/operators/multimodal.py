@@ -34,6 +34,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from m12_kafkastreams_python_azure_spark.pins import pin
+
 # Flip to False to surface NotImplementedError where real codecs are needed.
 DETERMINISTIC_FAKE_DECODE = True
 
@@ -611,21 +613,14 @@ def video_near_dup(
     pair aggregation (one broadcast-sized join, no post-agg re-join per
     side), and only 16-byte (id, hash) rows ever shuffle — the media
     payload never leaves the frame-sampling Python worker."""
-    from m12_kafkastreams_python_azure_spark.sources.readers import (
-        register_parallel_cache,
-    )
-
     frames = sample_video_frames(media, every_n=1)
-    # persisted: four downstream subtrees (ubiquity filter, clip counts,
+    # pinned: four downstream subtrees (ubiquity filter, clip counts,
     # both pair sides) consume this, and Spark has no cross-subtree CSE —
-    # without the persist the Python frame-sampling pass over every
-    # payload re-executes once per subtree
-    vf = frames.select("media_id", "frame_phash64").distinct().persist()
-    register_parallel_cache(vf)
-    # materialization barrier (the _parallel_text convoy rule): the four
-    # subtrees launch concurrently and would otherwise race the
-    # cache-write, re-running the Python frame-sampling pass per subtree
-    vf.count()
+    # without the pin the Python frame-sampling pass over every payload
+    # re-executes once per subtree. Eager (the _parallel_text convoy
+    # rule): the four subtrees launch concurrently and would otherwise
+    # race the cache-write, re-running the frame-sampling pass per subtree
+    vf = pin(frames.select("media_id", "frame_phash64").distinct())
     # ubiquitous-frame guard: vf is distinct, so count(*) == clip count
     rare = (
         vf.groupBy("frame_phash64")
@@ -865,17 +860,11 @@ def audio_near_dup(
     set; the argmax is two bounded aggregations (max votes, then min
     offset among ties — deterministic on both engines), never a window
     over an unbounded partition."""
-    from m12_kafkastreams_python_azure_spark.sources.readers import (
-        register_parallel_cache,
-    )
-
-    fp = audio_fingerprints(media).persist()
-    register_parallel_cache(fp)
-    # materialization barrier (the _parallel_text convoy rule): the rarity
-    # aggregate and both join sides read this concurrently — unbarriered,
-    # each raced the cache-write and re-ran the Python fingerprint pass
-    # (r20 stage profile: four 12-21 s executor-time stages at sf0.1)
-    fp.count()
+    # eager pin (the _parallel_text convoy rule): the rarity aggregate and
+    # both join sides read this concurrently — unbarriered, each raced the
+    # cache-write and re-ran the Python fingerprint pass (r20 stage
+    # profile: four 12-21 s executor-time stages at sf0.1)
+    fp = pin(audio_fingerprints(media))
     rare = (
         fp.groupBy("fp64")
         .agg(F.countDistinct("media_id").alias("_nc"))
@@ -893,22 +882,19 @@ def audio_near_dup(
         F.col("win_idx").alias("win_b"),
         "fp64",
     )
-    votes = (
+    votes = pin(
         a.join(b, "fp64")
         .filter(F.col("id_a") < F.col("id_b"))
         .groupBy(
             "id_a", "id_b", (F.col("win_b") - F.col("win_a")).alias("offset")
         )
         .agg(F.count("*").alias("votes"))
-        # persisted + barriered: the argmax reads this twice (max per pair,
+        # pinned + barriered: the argmax reads this twice (max per pair,
         # then the tie-break join-back) — without the pin the whole
         # fingerprint equi-join expansion re-runs for the second consumer.
         # The histogram is bounded by the match set (pairs x offsets), far
         # smaller than the join it summarizes.
-        .persist()
     )
-    register_parallel_cache(votes)
-    votes.count()
     best = votes.groupBy("id_a", "id_b").agg(F.max("votes").alias("votes"))
     return (
         votes.join(best, ["id_a", "id_b", "votes"])

@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..pins import pin
 from ..sources.readers import load_table
 
 HLL_REL_ERR = 0.05  # lgConfigK=12 default: ~1.6% RSE; 5% is >3 sigma
@@ -200,17 +201,16 @@ def q_cms_merge_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself is DEPTH x WIDTH rows regardless of data volume — the merge
     stage shuffles KBs. Probes join against the broadcast 2k-row sketch.
     """
-    from ..sources.readers import register_parallel_cache
-
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", F.to_date("ts").alias("day")
     )
     # (user, day) partials feed FOUR branches (daily, direct, probes, and
-    # the linearity join); persist so the raw-events scan + shuffle-agg
+    # the linearity join); pinned so the raw-events scan + shuffle-agg
     # runs once, not per branch. The partial table is bounded by
     # users x days — small at any corpus scale.
-    ud = register_parallel_cache(
-        ev.groupBy("user_id", "day").agg(F.count(F.lit(1)).alias("n")).persist()
+    ud = pin(
+        ev.groupBy("user_id", "day").agg(F.count(F.lit(1)).alias("n")),
+        eager=False,
     )
     cells = F.array(
         *[

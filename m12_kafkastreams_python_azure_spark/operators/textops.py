@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from m12_kafkastreams_python_azure_spark.functions import text as T
+from m12_kafkastreams_python_azure_spark.pins import pin
 from m12_kafkastreams_python_azure_spark.sources.readers import load_table
 
 
@@ -100,8 +101,11 @@ def clean_corpus(
     norm = F.trim(F.regexp_replace(F.lower(F.col("text")), "\\s+", " "))
     # Materialize norm_text FIRST: quality expressions reference it several
     # times, and Catalyst's project-collapse would otherwise re-inline the
-    # regexp_replace into every one of them (N regex passes per row).
-    normed = docs.select("doc_id", "lang", norm.alias("norm_text")).persist()
+    # regexp_replace into every one of them (N regex passes per row). The
+    # lazy pin is the plan barrier; the caller's scope releases it.
+    normed = pin(
+        docs.select("doc_id", "lang", norm.alias("norm_text")), eager=False
+    )
     cols = T.quality_score_cols(F.col("norm_text"))
     staged = normed.select(
         "doc_id",
@@ -390,18 +394,12 @@ def _bpe_train(docs: DataFrame, iters: int):
     """Shared BPE training loop: returns (per-iteration merge-row
     DataFrames, final word -> symbol-sequence vocab). ``bpe_merges``
     publishes the former, ``bpe_encode`` applies the latter."""
-    from m12_kafkastreams_python_azure_spark.sources.readers import (
-        register_parallel_cache,
-    )
-
-    # vocab-sized; every iteration re-reads it, so one corpus scan total.
-    # Registered (not bare .cache()) so the FIFO persist registry frees it
-    # across a long query sweep — library callers never leak storage.
-    wc = register_parallel_cache(
+    # vocab-sized; every iteration re-reads it, so one corpus scan total
+    wc = pin(
         docs.select(F.explode(F.split(F.trim("text"), r"\s+")).alias("word"))
         .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("wcnt"))
-        .persist()
+        .agg(F.count(F.lit(1)).alias("wcnt")),
+        eager=False,
     )
     vocab = wc.select(
         "word", F.trim(F.regexp_replace("word", "(.)", "$1 ")).alias("sym"), "wcnt"
@@ -473,7 +471,7 @@ def _bpe_train(docs: DataFrame, iters: int):
                 "wcnt",
             )
         )
-        vocab = register_parallel_cache(vocab.persist())
+        vocab = pin(vocab, eager=False)
     return merge_rows, vocab.select("word", "sym")
 
 
@@ -652,19 +650,15 @@ def pmi_bigrams(
         .agg(F.count(F.lit(1)).alias("c12"))
         .filter(F.col("c12") >= min_count)
     )
-    from m12_kafkastreams_python_azure_spark.sources.readers import (
-        register_parallel_cache,
-    )
-
     # consumed by BOTH marginal joins AND the totals aggregate; without
-    # the persist the corpus-wide explode+aggregate subtree executes once
-    # per consumer (vocab-sized table — same trade as _bpe_train's
-    # word-count cache). Registered so the FIFO persist registry frees it.
-    unigrams = register_parallel_cache(
+    # the pin the corpus-wide explode+aggregate subtree executes once per
+    # consumer (vocab-sized table — same trade as _bpe_train's word-count
+    # cache).
+    unigrams = pin(
         docs.select(F.explode(F.split(F.trim("text"), r"\s+")).alias("word"))
         .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .persist()
+        .agg(F.count(F.lit(1)).alias("c")),
+        eager=False,
     )
     # totals count ALL tokens/bigrams, not the min_count-filtered ones.
     # Derived from the persisted unigram table instead of a third corpus
@@ -786,15 +780,11 @@ def bpe_train(
     TakeOrderedAndProject top-1 — the corpus is scanned exactly once,
     by the word-count collapse up front.
     """
-    from m12_kafkastreams_python_azure_spark.sources.readers import (
-        register_parallel_cache,
-    )
-
-    wc = register_parallel_cache(
+    wc = pin(
         docs.select(F.explode(F.split(F.trim("text"), r"\s+")).alias("word"))
         .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("wcnt"))
-        .persist()
+        .agg(F.count(F.lit(1)).alias("wcnt")),
+        eager=False,
     )
     # The merge loop re-scans the (vocab-sized, tiny-rows) checkpoint 1-2
     # times per merge: at the session's full shuffle-partition count that
@@ -890,10 +880,10 @@ def q_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bench/driver surface for the full BPE training loop: 16 merges on
     the documents corpus, returned as the merge table. EAGER by nature —
     BPE's merges are sequential, so the driver loop runs at CONSTRUCTION
-    time and bench.py times construction + count for this entry
-    (``EAGER_QUERIES``); wall/16 is the per-merge cost a tokenizer team
-    sizes their 50k-merge run with. Rows-only in the driver contract (no
-    single SQL statement expresses an N-deep sequential merge); bounded
+    time, inside bench.py's construction + count clock; wall/16 is the
+    per-merge cost a tokenizer team sizes their 50k-merge run with.
+    Rows-only in the driver contract (no single SQL statement expresses
+    an N-deep sequential merge); bounded
     by the oracle-checked unrolled ``bpe_merges`` and the pure-Python
     reference pin in tests/test_round9_ops.py."""
     from m12_kafkastreams_python_azure_spark.sources.readers import load_table
@@ -1227,8 +1217,8 @@ def winnow_pairs(
     Inherits the whole containment discipline: exact duplicates
     collapse to their min-id representative before fingerprinting (the
     engine's duplicate law — this IS a bucketed candidate generator;
-    EAGER at construction, bench times it in EAGER_QUERIES), ubiquitous
-    fingerprint hashes (df > ``max_df``) are dropped from candidate
+    EAGER at construction), ubiquitous fingerprint hashes
+    (df > ``max_df``) are dropped from candidate
     generation AND the size denominators via a broadcast anti-join, and
     the pair expansion is bucket-local (``dedup.bucket_pairs``; the df
     cap IS the bucket bound). Output: (id_a, id_b, shared_fps,
@@ -1239,13 +1229,9 @@ def winnow_pairs(
     from m12_kafkastreams_python_azure_spark.operators.dedup import (
         collapse_reps_only,
         expansion_partitions,
-        register_parallel_cache,
     )
 
-    reps = register_parallel_cache(
-        collapse_reps_only(docs.select("doc_id", "text")).persist()
-    )
-    reps.count()
+    reps = pin(collapse_reps_only(docs.select("doc_id", "text")))
     return winnow_pair_scores(
         reps, k, w, max_df, expansion_partitions(docs), threshold=threshold
     )
@@ -1275,28 +1261,20 @@ def winnow_pair_scores(
         expansion_partitions,
     )
 
-    from m12_kafkastreams_python_azure_spark.sources.readers import (
-        register_parallel_cache,
-    )
-
     if n_parts is None:
         n_parts = expansion_partitions(reps)
-    # Persisted (registry): the fingerprint table feeds BOTH the hot-df
-    # aggregate and the rare anti-join, and Spark shares no subtrees
-    # across join branches — without the pin the md5 hashing pass (the
-    # screen's dominant CPU cost) runs twice. 1/3-density projection of
+    # Pinned: the fingerprint table feeds BOTH the hot-df aggregate and
+    # the rare anti-join, and Spark shares no subtrees across join
+    # branches — without the pin the md5 hashing pass (the screen's
+    # dominant CPU cost) runs twice. 1/3-density projection of
     # two longs + id. The count() is the materialization barrier (the
     # containment_pairs reps-pin discipline): the hot aggregate and the
     # rare anti-join probe are independent leaf stages of the same job
     # and can scan concurrently, racing the cache and re-running the
-    # hashing pass the persist exists to dedupe (ADVICE r16).
-    fps = register_parallel_cache(
-        winnow_fingerprints(reps, k, w)
-        .select("doc_id", "fp_hash")
-        .distinct()
-        .persist()
+    # hashing pass the pin exists to dedupe (ADVICE r16).
+    fps = pin(
+        winnow_fingerprints(reps, k, w).select("doc_id", "fp_hash").distinct()
     )
-    fps.count()
     hot = (
         fps.groupBy("fp_hash")
         .agg(F.count(F.lit(1)).alias("df"))

@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..pins import pin
+
 TPCH_TABLES = [
     "region",
     "nation",
@@ -75,49 +77,6 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
-#: DataFrames persisted by ``parallel_scan`` and the dedup/similarity
-#: helpers. Each new registering invocation (or an explicit
-#: ``release_parallel_caches()``) unpersists what came before, bounding
-#: cache growth across a long query sweep. NOTE the contract: operators
-#: eagerly materialize their caches and consume them within the same
-#: invocation; a PRIOR operator's still-lazy result remains correct after
-#: its caches are released — it just recomputes uncached.
-_CACHED: list[DataFrame] = []
-
-#: registry cap: beyond this many pinned intermediates the OLDEST are
-#: unpersisted (FIFO). Keeps a long sweep bounded while leaving the most
-#: recent few queries' still-lazy plans their caches.
-MAX_PINNED = 8
-
-
-def release_parallel_caches() -> None:
-    """Unpersist every registered intermediate. Safe to call any time:
-    unpersist is a hint-removal, never a correctness change (a
-    still-referenced plan just recomputes)."""
-    while _CACHED:
-        df = _CACHED.pop()
-        try:
-            df.unpersist()
-        except Exception:  # session already stopped — nothing to free
-            pass
-
-
-def register_parallel_cache(df: DataFrame) -> DataFrame:
-    """Register a persisted DataFrame so a later operator invocation (or
-    ``release_parallel_caches``) frees it. The registry is FIFO-capped at
-    ``MAX_PINNED``: growth stays bounded across an arbitrarily long query
-    sweep, while the last few queries keep their caches so a still-lazy
-    result built just before a new invocation is not silently unpinned."""
-    _CACHED.append(df)
-    while len(_CACHED) > MAX_PINNED:
-        old = _CACHED.pop(0)
-        try:
-            old.unpersist()
-        except Exception:
-            pass
-    return df
-
-
 def parallel_scan(df: DataFrame) -> DataFrame:
     """Spread a (small-file) scan across all cores WITH a materialization
     barrier, so expensive narrow expressions layered on top run in parallel.
@@ -129,13 +88,8 @@ def parallel_scan(df: DataFrame) -> DataFrame:
     several concurrent stages over this cache would otherwise race on the
     per-partition cache-write lock (observed as nondeterministic multi-x
     stalls); after one action, every downstream access is a lock-free
-    cached read. The result is registered in the FIFO-capped cache
-    registry, so repeated invocations don't accumulate pinned copies while
-    the most recent queries keep theirs."""
-    out = df.repartition(df.sparkSession.sparkContext.defaultParallelism).persist()
-    register_parallel_cache(out)
-    out.count()
-    return out
+    cached read."""
+    return pin(df.repartition(df.sparkSession.sparkContext.defaultParallelism))
 
 
 def mask_field(df: DataFrame, field: str, replacement: str) -> DataFrame:

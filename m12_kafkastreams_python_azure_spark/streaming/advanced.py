@@ -26,6 +26,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.window import Window
 
+from ..pins import query_scope
 from ..sources.fs import dir_has_data
 
 
@@ -1086,17 +1087,19 @@ def containment_batch_processor(
         rare = bspark.read.parquet(gdir)
         sizes = bspark.read.parquet(sdir)
         hot = bspark.read.parquet(hdir)
-        out = containment_against(
-            batch.select(
-                F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-            ),
-            rare,
-            sizes,
-            hot,
-            n=n,
-            threshold=thr,
-        )
-        out.write.mode("overwrite").parquet(f"{outdir}/batch={batch_id}")
+        # the micro-batch owns its pins: the write below is their last use
+        with query_scope():
+            out = containment_against(
+                batch.select(
+                    F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
+                ),
+                rare,
+                sizes,
+                hot,
+                n=n,
+                threshold=thr,
+            )
+            out.write.mode("overwrite").parquet(f"{outdir}/batch={batch_id}")
 
     return _process
 

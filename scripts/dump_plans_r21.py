@@ -64,25 +64,22 @@ def main() -> None:
     os.makedirs(out_dir, exist_ok=True)
 
     import __spark_entry__ as entrymod
+    from m12_kafkastreams_python_azure_spark.pins import query_scope
     from m12_kafkastreams_python_azure_spark.plans.checks import explain_str
-    from m12_kafkastreams_python_azure_spark.sources.readers import (
-        release_parallel_caches,
-    )
 
     spark = get_spark(app_name="plans-r21")
     spark.sparkContext.setLogLevel("ERROR")
     queries = entrymod.queries()
     for name in names:
         try:
-            df = queries[name](spark, sf_dir)
-            plan = explain_str(df)
+            with query_scope():
+                plan = explain_str(queries[name](spark, sf_dir))
         except Exception as e:  # noqa: BLE001
             plan = f"ERROR: {type(e).__name__}: {e}"
         with open(os.path.join(out_dir, f"{name}_{tag}.txt"), "w") as fh:
             fh.write(plan)
         print(f"wrote {name}_{tag}.txt ({len(plan)} chars)")
         spark.catalog.clearCache()
-        release_parallel_caches()
 
 
 if __name__ == "__main__":

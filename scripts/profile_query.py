@@ -1,8 +1,8 @@
 """Per-stage wall/metric attribution for named queries.
 
-Runs each query with the bench's methodology (warm-up + 2 timed runs,
-caches cleared between queries) in a session with the event log enabled,
-then parses the log into a per-query, per-stage table:
+Runs each query with the bench's methodology (warm-up + 2 timed runs of
+construction + count(), each in its own pin scope) in a session with the
+event log enabled, then parses the log into a per-query, per-stage table:
 
   stage wall (completion - submission), task count, executorRunTime sum,
   shuffle read/write bytes, input bytes, and the job description active
@@ -23,10 +23,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402
 import __spark_entry__ as entrymod  # noqa: E402
+from m12_kafkastreams_python_azure_spark.pins import query_scope  # noqa: E402
 from m12_kafkastreams_python_azure_spark.session import get_spark  # noqa: E402
-from m12_kafkastreams_python_azure_spark.sources.readers import (  # noqa: E402
-    release_parallel_caches,
-)
 
 EVDIR = "/tmp/spark-events-profile"
 
@@ -57,17 +55,12 @@ def run(names: list[str]) -> None:
     for name in names:
         for run_i in range(2):
             spark.sparkContext.setJobDescription(f"Q:{name}:run{run_i}")
-            if name in bench.EAGER_QUERIES:
+            with query_scope():
                 t0 = time.perf_counter()
-                df = queries[name](spark, bench.SF_DIR)
-            else:
-                df = queries[name](spark, bench.SF_DIR)
-                t0 = time.perf_counter()
-            df.count()
-            walls.setdefault(name, []).append(time.perf_counter() - t0)
+                queries[name](spark, bench.SF_DIR).count()
+                walls.setdefault(name, []).append(time.perf_counter() - t0)
             spark.sparkContext.setJobDescription(None)
             spark.catalog.clearCache()
-            release_parallel_caches()
     spark.stop()
 
     # ---- parse the event log (plain file, or Spark 4 rolling dir) ----

@@ -7,6 +7,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from m12_kafkastreams_python_azure_spark.pins import query_scope  # noqa: E402
 from m12_kafkastreams_python_azure_spark.session import get_spark  # noqa: E402
 
 SF_SMOKE = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
@@ -21,3 +22,11 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+@pytest.fixture(autouse=True)
+def _pin_scope():
+    """Each test owns one pin scope: the pins its operators make are
+    released when the test ends, so no test reads another's caches."""
+    with query_scope():
+        yield

@@ -336,17 +336,14 @@ def test_weighted_budget_select_plan_shape(spark, sf_dir):
     import re
 
     from m12_kafkastreams_python_azure_spark.operators import curation as CU
+    from m12_kafkastreams_python_azure_spark.pins import query_scope
     from m12_kafkastreams_python_azure_spark.plans.checks import explain_str
-    from m12_kafkastreams_python_azure_spark.sources.readers import (
-        release_parallel_caches,
-    )
 
-    # earlier tests may have left the fill's persisted scored projection
-    # in the registry; a cached subtree renders as InMemoryTableScan and
-    # hides the nodes this pin asserts on
+    # nothing cached earlier may survive into this plan: a cached subtree
+    # renders as InMemoryTableScan and hides the nodes this pin asserts on
     spark.catalog.clearCache()
-    release_parallel_caches()
-    s = explain_str(CU.q_weighted_budget_select(spark, sf_dir))
+    with query_scope():
+        s = explain_str(CU.q_weighted_budget_select(spark, sf_dir))
     tree = s.split("\n\n")[0]
     assert "CartesianProduct" not in tree
     # exactly ONE nested-loop node: the bounded 1-row gram-total
@@ -372,14 +369,12 @@ def test_soft_dedup_screen_plan_shape(spark, sf_dir):
     gram-keyed LEFT equi-join + one doc agg + one bounded 1-row meta
     broadcast — nothing quadratic."""
     from m12_kafkastreams_python_azure_spark.operators import dedup as D
+    from m12_kafkastreams_python_azure_spark.pins import query_scope
     from m12_kafkastreams_python_azure_spark.plans.checks import explain_str
-    from m12_kafkastreams_python_azure_spark.sources.readers import (
-        release_parallel_caches,
-    )
 
     spark.catalog.clearCache()
-    release_parallel_caches()
-    s = explain_str(D.q_soft_dedup_screen(spark, sf_dir))
+    with query_scope():
+        s = explain_str(D.q_soft_dedup_screen(spark, sf_dir))
     tree = s.split("\n\n")[0]
     assert "CartesianProduct" not in tree
     # the single nested-loop node is the 1-row n_ref_docs meta broadcast

@@ -140,14 +140,12 @@ def test_screened_plan_is_cartesian_free(spark, sf_dir):
     screen + verify are equi-joins end to end — no cartesian, no
     nested-loop anywhere (the candidate fan-out is a broadcast HASH join
     on id_a, the shared-gram count an (id_b, gram) equi-join)."""
+    from m12_kafkastreams_python_azure_spark.pins import query_scope
     from m12_kafkastreams_python_azure_spark.plans.checks import explain_str
-    from m12_kafkastreams_python_azure_spark.sources.readers import (
-        release_parallel_caches,
-    )
 
     spark.catalog.clearCache()
-    release_parallel_caches()
-    s = explain_str(D.q_containment_screened(spark, sf_dir))
+    with query_scope():
+        s = explain_str(D.q_containment_screened(spark, sf_dir))
     tree = s.split("\n\n")[0]
     assert "CartesianProduct" not in tree
     assert "BroadcastNestedLoopJoin" not in tree
